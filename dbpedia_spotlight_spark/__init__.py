@@ -8,7 +8,7 @@ v0.7.1), re-expressed Spark-first:
              --(equi-joins on stats tables)--> mention_candidates
              --(log-domain generative context scoring, pure column math)--> scored
              --(window rank + NIL gate + softmax)--> linked_mentions
-             --(blocking keys + salted self-join + pairwise JW/TF-ICF)--> edges
+             --(one star per resolved URI)--> edges
              --(large-star/small-star connected components)--> clusters
 
 Everything is DataFrame-declarative; Python appears only in Arrow-batched

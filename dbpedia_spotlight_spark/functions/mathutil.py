@@ -1,8 +1,7 @@
 """Log-domain math, vectorized with numpy.
 
 Semantics mirror the reference's MathUtil (core/.../util/MathUtil.scala:9-57):
-LOGZERO = -inf; ln(0) = -inf; lnsum = logaddexp skipping -inf operands;
-lnproduct = plain sum (any -inf operand makes the product -inf).
+LOGZERO = -inf; ln(0) = -inf.
 """
 
 from __future__ import annotations
@@ -17,27 +16,6 @@ def ln(x):
     x = np.asarray(x, dtype=np.float64)
     with np.errstate(divide="ignore"):
         return np.log(x)
-
-
-def lnsum(a, b):
-    """log(e^a + e^b); if either is -inf, returns the other (MathUtil.scala:29-41)."""
-    return np.logaddexp(a, b)
-
-
-def lnproduct(*terms):
-    """Sum of log-terms; -inf propagates (MathUtil.scala:47-56)."""
-    out = np.asarray(terms[0], dtype=np.float64)
-    for t in terms[1:]:
-        out = out + np.asarray(t, dtype=np.float64)
-    return out
-
-
-def lnsum_seq(values) -> float:
-    """Fold lnsum over a sequence starting at LOGZERO (MathUtil.scala:43-45)."""
-    acc = LOGZERO
-    for v in values:
-        acc = np.logaddexp(acc, v)
-    return float(acc)
 
 
 def logsumexp(values) -> float:

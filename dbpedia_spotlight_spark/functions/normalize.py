@@ -57,20 +57,6 @@ def sf_normalize_py(s: str) -> str:
     return " ".join(toks)
 
 
-def language_normalize_expr(col: Column, lang: str = "en") -> Column:
-    """Language-specific token normalizations
-    (db/tokenize/LanguageIndependentTokenizer.scala:74-88 Helper.normalize):
-    en: possessive `'s`/`’s` -> ` s`; fr/it: article elision (l', d', ...)
-    separated from the word."""
-    if lang == "en":
-        return F.regexp_replace(col, "[’']s\\b", " s")
-    if lang in ("fr", "it"):
-        return F.regexp_replace(
-            col, "\\b([dljmtsncDLJMTSNC]|qu|Qu)[’']", "$1' "
-        )
-    return col
-
-
 def language_normalize_py(s: str, lang: str = "en") -> str:
     if lang == "en":
         return re.sub(r"[’']s\b", " s", s)

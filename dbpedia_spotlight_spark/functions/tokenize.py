@@ -32,11 +32,3 @@ def tokenize_expr(col: Column, stopwords_col=None) -> Column:
 def tokenize_py(s: str) -> list[str]:
     """Pure-Python twin used by the oracle and the fixture generator."""
     return [t for t in re.split(_TOKEN_SPLIT, s.lower()) if t]
-
-
-def tokenize_sql(col_sql: str) -> str:
-    """DuckDB twin for the driver's oracle gate."""
-    return (
-        f"list_filter(string_split_regex(lower({col_sql}), '[^a-z0-9]+'),"
-        " t -> t <> '')"
-    )

@@ -1,18 +1,12 @@
-"""Blocking + salt-based skew splitting for the pairwise self-join.
+"""Blocking counters: skew accounting for the resolve manifest.
 
 Blocking key = normalized surface form (MemorySurfaceFormStore.scala:43
-— the same key the reference uses for its lowercase fallback map), per
-the north star, optionally extended with a coarse context-token key.
-
-Surface-form frequencies are Zipfian, so blocks are skewed: one hot form
-can dominate a self-join. Skew handling is explicit (north_rule):
-blocks larger than `salt_block_cap` are split into ceil(n/cap) salt
-buckets by a deterministic hash of the mention key; pair generation then
-fans out over (bucket_i, bucket_j) task pairs so no single task exceeds
-~cap² comparisons. AQE skew-join remains on as a second line of defense.
-
-Counters (blocks split, max block size, task count) are returned for the
-per-partition lineage/metrics manifest.
+— the same key the reference uses for its lowercase fallback map).
+Surface-form frequencies are Zipfian, so blocks are skewed. The counters
+report how a salt split would shard them: a block larger than
+`salt_block_cap` counts ceil(n/cap) salt buckets (at most
+`n_salts_max`), and n_salt buckets make n_salt·(n_salt+1)/2
+(bucket_i <= bucket_j) task pairs.
 """
 
 from __future__ import annotations
@@ -42,93 +36,29 @@ def add_block_key(mentions: DataFrame) -> DataFrame:
 def salted_blocks(
     mentions: DataFrame,
     params: PipelineParams = DEFAULT_PARAMS,
-) -> tuple[DataFrame, DataFrame, BlockingCounters]:
-    """Assign salt buckets and build the (block, bucket_i, bucket_j) task list.
-
-    Returns (mentions + [block_key, n_salt, bucket],
-             tasks(block_key, bi, bj),
-             counters).
-    """
+) -> BlockingCounters:
+    """Block sizes, salt splits and salt task count, in one Spark action."""
     cap = params.salt_block_cap
-    mentions = add_block_key(mentions)
-
-    sizes = mentions.groupBy("block_key").agg(
-        F.count("*").alias("block_size")
-    ).withColumn(
-        "n_salt",
-        F.least(
-            F.ceil(F.col("block_size") / F.lit(cap)).cast("int"),
-            F.lit(params.n_salts_max),
-        ),
+    n_salt = F.least(
+        F.ceil(F.col("block_size") / F.lit(cap)).cast("int"),
+        F.lit(params.n_salts_max),
     )
-
-    salted = mentions.join(F.broadcast(sizes), "block_key").withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("mention_key"), F.col("n_salt")).cast("int"),
-    )
-
-    # task list: all bucket pairs (bi <= bj) per block — dimension-sized
-    tasks = (
-        sizes.select(
-            "block_key",
-            F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1)).alias("bi"),
-            (F.col("n_salt") - 1).alias("_max"),
+    stats = (
+        add_block_key(mentions)
+        .groupBy("block_key")
+        .agg(F.count("*").alias("block_size"))
+        .withColumn("n_salt", n_salt)
+        .agg(
+            F.count("*").alias("n_blocks"),
+            F.sum(F.when(F.col("n_salt") > 1, 1).otherwise(0)).alias("n_split"),
+            F.max("block_size").alias("max_size"),
+            F.sum(F.col("n_salt") * (F.col("n_salt") + 1) / 2).alias("n_tasks"),
         )
-        .select(
-            "block_key",
-            "bi",
-            F.explode(F.sequence(F.col("bi"), F.col("_max"))).alias("bj"),
-        )
+        .collect()[0]
     )
-
-    stats = sizes.agg(
-        F.count("*").alias("n_blocks"),
-        F.sum(F.when(F.col("n_salt") > 1, 1).otherwise(0)).alias("n_split"),
-        F.max("block_size").alias("max_size"),
-    ).collect()[0]
-    n_tasks = tasks.count()
-    counters = BlockingCounters(
+    return BlockingCounters(
         n_blocks=int(stats["n_blocks"] or 0),
         n_blocks_split=int(stats["n_split"] or 0),
         max_block_size=int(stats["max_size"] or 0),
-        n_salt_tasks=int(n_tasks),
+        n_salt_tasks=int(stats["n_tasks"] or 0),
     )
-    return salted, tasks, counters
-
-
-def generate_pairs(
-    salted: DataFrame,
-    tasks: DataFrame,
-    params: PipelineParams = DEFAULT_PARAMS,
-) -> DataFrame:
-    """All unordered mention pairs within each block, salt-split.
-
-    Output: block_key, and *_a / *_b copies of (mention_key, sf, doc_id, uri?).
-    Pairs are deduplicated by requiring mention_key_a < mention_key_b; for
-    bi < bj the bucket assignment already makes sides disjoint.
-    """
-    keep = ["mention_key", "sf", "doc_id", "block_key", "bucket"]
-    extra = [c for c in ("uri", "res_id") if c in salted.columns]
-    cols = keep + extra
-    base = salted.select(*cols)
-
-    a = base.select(
-        "block_key",
-        F.col("bucket").alias("bi"),
-        *[F.col(c).alias(f"{c}_a") for c in cols if c not in ("block_key", "bucket")],
-    )
-    b = base.select(
-        "block_key",
-        F.col("bucket").alias("bj"),
-        *[F.col(c).alias(f"{c}_b") for c in cols if c not in ("block_key", "bucket")],
-    )
-    pairs = (
-        F.broadcast(tasks).join(a, ["block_key", "bi"])
-        .join(b, ["block_key", "bj"])
-        .filter(
-            (F.col("bi") < F.col("bj"))
-            | (F.col("mention_key_a") < F.col("mention_key_b"))
-        )
-        .drop("bi", "bj")
-    )
-    return pairs

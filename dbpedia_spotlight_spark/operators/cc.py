@@ -44,8 +44,9 @@ DRIVER_CC_MAX_EDGES = 2_000_000
 # capped by the LocalLimit at MAX+1 rows, so the transient worst case is
 # probe_parts x min(partition_rows, MAX+1) short key-pair rows. Callers
 # at scales where that transient matters set SPARK_CC_PROBE_PARTS=1 to
-# restore the conservative ramp.
-CC_PROBE_PARTS = int(os.environ.get("SPARK_CC_PROBE_PARTS", "32"))
+# restore the conservative ramp; the variable is read at each probe, and
+# a value that does not parse or is below 1 falls back to this default.
+CC_PROBE_PARTS = 32
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -94,14 +95,20 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 
 def _bounded_probe(cur: DataFrame):
     """limit(MAX+1).toArrow() with the first collect wave widened to
-    CC_PROBE_PARTS partitions (see the constant's comment for the
-    measured win and the memory bound). The conf is scoped to this one
-    collect and restored afterwards — runtime SQL confs are read at
+    SPARK_CC_PROBE_PARTS partitions (see CC_PROBE_PARTS's comment for
+    the measured win and the memory bound). The conf is scoped to this
+    one collect and restored afterwards — runtime SQL confs are read at
     execution, and the CC paths run their probes sequentially."""
+    try:
+        parts = int(os.environ.get("SPARK_CC_PROBE_PARTS", CC_PROBE_PARTS))
+    except ValueError:
+        parts = CC_PROBE_PARTS
+    if parts < 1:
+        parts = CC_PROBE_PARTS
     spark = cur.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
     old = spark.conf.get(key, None)
-    spark.conf.set(key, str(CC_PROBE_PARTS))
+    spark.conf.set(key, str(parts))
     try:
         return cur.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
     finally:
@@ -109,14 +116,6 @@ def _bounded_probe(cur: DataFrame):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-
-
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Collected union-find with min-member component ids — the small-side
-    fast path. Exact same contract as the distributed loop."""
-    # one Arrow transfer (edge count is gated by DRIVER_CC_MAX_EDGES;
-    # toLocalIterator paid per-batch RPC overhead)
-    return _union_find_arrow(edges.toArrow(), edges.sparkSession)
 
 
 def _union_find_arrow(tbl, spark) -> DataFrame:
@@ -245,27 +244,7 @@ def connected_components(
         # materialize the input once — the signature check plus the first
         # iteration otherwise recompute the upstream edge derivation 3x
         cur = cur.localCheckpoint()
-        if not force_distributed:
-            # duplicate-heavy inputs: the raw count overshoots; a cheap
-            # sketch decides whether the DISTINCT edge set still fits on
-            # the driver (HLL error ~5% — the 0.9 margin absorbs it).
-            # Only then pay the distinct shuffle for the small pull.
-            est = cur.agg(
-                F.approx_count_distinct(
-                    F.concat_ws("\x00", "src", "dst")
-                ).alias("d")
-            ).collect()[0]["d"]
-            if est <= DRIVER_CC_MAX_EDGES * 0.9:
-                dedup = cur.distinct().localCheckpoint()
-                if dedup.count() <= DRIVER_CC_MAX_EDGES:
-                    return F.broadcast(_driver_union_find(dedup))
-                cur = dedup
-            else:
-                cur = cur.distinct()
-        else:
-            cur = cur.distinct()
-    else:
-        cur = cur.distinct()
+    cur = cur.distinct()
 
     start_step = 0
     if store is not None:

@@ -47,27 +47,10 @@ def exact_dedup(
 # shingling + MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def word_shingles(text_col, n: int = 3):
-    """Distinct word n-grams as an array column (JVM-side HOFs).
-
-    Correct but interpreted (higher-order functions skip codegen) —
-    measured ~0.4 ms/doc. Kept as the pure-SQL-shaped twin; hot paths use
-    word_shingles_udf below."""
-    toks = F.filter(F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != "")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(
-            F.array(F.array_join(toks, " "))
-        )
-    )
-
-
 def word_shingles_udf(n: int):
-    """Arrow-batched twin of word_shingles — identical output, ~20x the
-    throughput of the interpreted HOF tree, still narrow (no shuffle)."""
+    """Distinct word n-grams as an array column, Arrow-batched — ~20x the
+    throughput of the equivalent interpreted higher-order-function tree,
+    still narrow (no shuffle)."""
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -271,27 +254,6 @@ def minhash_signature_md5_udf(n: int, num_hashes: int):
     return sig_udf
 
 
-def minhash_signature(shingles_col, num_hashes: int = 16):
-    """array<string> of per-seed minima of md5(seed || shingle).
-
-    The lexicographic minimum of a keyed cryptographic digest is a valid
-    min-hash; using md5 keeps Spark and the DuckDB oracle bit-identical.
-    """
-
-    # NB: the lambda must be unary — PySpark treats a two-parameter lambda
-    # as (element, index) and would shadow the seed.
-    def seeded(i: int):
-        prefix = f"{i}|"
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles_col, seeded(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -329,7 +291,7 @@ def minhash_lsh_candidates(
         "xxhash64" at local[2]/local[8] on the sf0.1 corpus replicated
         120x, candidate counts within 0.4%. Use this at scale.
     """
-    if hash_fn not in ("md5", "md5_exploded", "xxhash64", "perm64"):
+    if hash_fn not in ("md5", "xxhash64", "perm64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     rows_per_band = num_hashes // bands
     if hash_fn == "perm64":
@@ -345,11 +307,12 @@ def minhash_lsh_candidates(
         return _band_join(sig, bands, rows_per_band, _bucket_xxhash64)
     if hash_fn == "md5":
         # same narrow single-kernel shape for the md5 oracle-twin family
-        # (see minhash_signature_md5_udf — bit-identical signatures, no
-        # shingle explode). The exploded plan's groupBy(_id) also MERGED
-        # rows sharing an id (min over the union of their shingles); the
-        # per-seed elementwise min below reproduces that exactly (min is
-        # associative), map-side combined to one tiny row per doc.
+        # (see minhash_signature_md5_udf — signatures bit-identical to an
+        # exploded groupBy(_id) min(md5) plan, pinned in tests). That
+        # groupBy MERGES rows sharing an id (min over the union of their
+        # shingles); the per-seed elementwise min below reproduces it
+        # exactly (min is associative), map-side combined to one tiny
+        # row per doc.
         sig = df.select(
             F.col(id_col).alias("_id"),
             minhash_signature_md5_udf(shingle_n, num_hashes)(
@@ -370,34 +333,20 @@ def minhash_lsh_candidates(
     # hash tree once per band reference (~32x). The groupBy computes each
     # hash exactly once and map-side combine reduces the shuffle to one
     # signature row per document — also the right shape at 10^12 rows.
-    # ("md5_exploded" keeps the SQL-shaped md5 plan runnable — the
-    # equivalence fixture the kernel path is tested against.)
-    shingler = (
-        word_shingle_hashes_udf(shingle_n)
-        if hash_fn == "xxhash64"
-        else word_shingles_udf(shingle_n)
-    )
     exploded = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(shingler(F.col(text_col))).alias("g"),
+        F.explode(word_shingle_hashes_udf(shingle_n)(F.col(text_col)))
+        .alias("g"),
     )
-    if hash_fn == "xxhash64":
-        # seed folded in as a leading literal column (xxhash64 chains its
-        # inputs, so (i, g) is a keyed hash of g); min over LONGs
-        seeded = [
-            F.min(F.xxhash64(F.lit(i), F.col("g")))
-            for i in range(num_hashes)
-        ]
-        bucket_of = _bucket_xxhash64
-    else:
-        seeded = [
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("g"))))
-            for i in range(num_hashes)
-        ]
-        bucket_of = _bucket_md5
-
+    # seed folded in as a leading literal column (xxhash64 chains its
+    # inputs, so (i, g) is a keyed hash of g); min over LONGs
+    seeded = [
+        F.min(F.xxhash64(F.lit(i), F.col("g"))) for i in range(num_hashes)
+    ]
     sig = exploded.groupBy("_id").agg(F.array(*seeded).alias("sig"))
-    return _band_join(sig, bands, rows_per_band, bucket_of, id_unique=True)
+    return _band_join(
+        sig, bands, rows_per_band, _bucket_xxhash64, id_unique=True
+    )
 
 
 def _bucket_xxhash64(b: int, rows_per_band: int):

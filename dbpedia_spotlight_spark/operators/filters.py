@@ -40,23 +40,6 @@ def confidence_filter(
     )
 
 
-def fit_confidence_thresholds(
-    scored: DataFrame, score_col: str = "final_score", n: int = 11
-) -> list[float]:
-    """Fit the ConfidenceFilter's simThresholds list (the reference ships
-    a trained `spotterThresholds` file with the model —
-    ConfidenceFilter.scala:49 indexes it by round((len-1)·confidence)):
-    equal-frequency quantiles of the score distribution, exact
-    percentiles (one pass, SQL-expressible)."""
-    from pyspark.sql import functions as F
-
-    qs = [i / (n - 1) for i in range(n)]
-    row = scored.agg(
-        *[F.percentile(score_col, q).alias(f"q{i}") for i, q in enumerate(qs)]
-    ).collect()[0]
-    return [float(row[f"q{i}"]) for i in range(n)]
-
-
 def support_filter(scored: DataFrame, support: int) -> DataFrame:
     """SupportFilter.scala:26 — resource.support >= target."""
     return scored.filter(F.col("support") >= support)

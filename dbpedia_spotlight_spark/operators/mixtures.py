@@ -45,10 +45,6 @@ def linear_regression_mixture(res_prior: Column, ctx_raw: Column) -> Column:
 LINREG_NIL_SCORE = 1234.3989 * 0.0 + 0.9968 * (-1.0) - 0.0275
 
 
-def only_sim_score_mixture(ctx_score: Column) -> Column:
-    return ctx_score
-
-
 def fader_mixture(
     ctx_raw: Column,
     res_prior: Column,

@@ -1021,20 +1021,6 @@ def resize_media(media: DataFrame, max_side: int = 64) -> DataFrame:
     )
 
 
-def resize_plan(decoded: DataFrame, max_side: int = 64) -> DataFrame:
-    """Resize metadata computation is pure column math (the pixel work
-    would live in the decode kernel): scale preserving aspect ratio."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(float(max_side)) / F.greatest("width", "height"),
-    )
-    return decoded.withColumn("scale", scale).withColumn(
-        "out_width", F.ceil(F.col("width") * scale).cast("int")
-    ).withColumn(
-        "out_height", F.ceil(F.col("height") * scale).cast("int")
-    )
-
-
 def sample_frames(decoded: DataFrame, every_k: int = 2) -> DataFrame:
     """Frame-sampling plan: one output row per kept frame index —
     an explode of a sequence column, fully relational."""

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Above this many redirect rows the driver-side chase (GBs of dict on the
@@ -54,17 +54,6 @@ def close_redirects(redirect_pairs: dict[str, str]) -> dict[str, str]:
         for node in chain:
             resolved[node] = final
     return resolved
-
-
-def resolve_uri_expr(spark, uri_col: Column, redirect_pairs: dict[str, str]) -> Column:
-    """Broadcast map-join expression: uri -> closed redirect target."""
-    closed = close_redirects(redirect_pairs)
-    if not closed:
-        return uri_col
-    mapping = F.create_map(
-        *[F.lit(x) for kv in closed.items() for x in kv]
-    )
-    return F.coalesce(mapping.getItem(uri_col), uri_col)
 
 
 def close_redirects_distributed(redirects: DataFrame) -> DataFrame:

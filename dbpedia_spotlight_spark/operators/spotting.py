@@ -24,7 +24,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PARAMS, PipelineParams
 from .ahocorasick import AhoCorasick, spot_text
@@ -108,28 +107,4 @@ def spot_documents(
 
     return documents.select("doc_id", "spans").mapInPandas(
         scan, schema=MENTIONS_SCHEMA
-    )
-
-
-def doc_token_arrays(documents: DataFrame, stopwords: list[str]) -> DataFrame:
-    """Per-document distinct context tokens as an array column.
-
-    The reference's two-step collapse (DBTwoStepDisambiguator.scala:126:
-    `tokens.distinct`) — pure column expressions, JVM-side: concatenate
-    text-span texts, tokenize, drop stopwords, distinct, sort.
-    """
-    from ..functions.tokenize import tokenize_expr
-
-    text_concat = F.array_join(
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("text")),
-            lambda s: s["text"],
-        ),
-        " ",
-    )
-    toks = tokenize_expr(text_concat)
-    if stopwords:
-        toks = F.filter(toks, lambda t: ~t.isin(*stopwords))
-    return documents.select(
-        "doc_id", F.array_sort(F.array_distinct(toks)).alias("query_tokens")
     )

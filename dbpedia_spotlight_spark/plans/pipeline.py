@@ -188,7 +188,7 @@ def resolve(
 
     # blocking counters (skew accounting for the manifest; the
     # reference-faithful edge set itself is linear in mentions)
-    salted, _tasks, bc = salted_blocks(
+    bc = salted_blocks(
         mentions.join(
             resolved.select("mention_key", "uri"), "mention_key", "left"
         ),

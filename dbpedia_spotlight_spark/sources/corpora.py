@@ -84,22 +84,6 @@ def read_sf_counts_tsv(spark: SparkSession, path: str) -> tuple[DataFrame, DataF
     return sf_counts, lowercase
 
 
-def read_uri_counts_tsv(spark: SparkSession, path: str) -> DataFrame:
-    """uriCounts: `wikiurl \\t count` (DBpediaResourceSource.scala:116)."""
-    return spark.read.csv(
-        path, sep="\t", schema="uri string, support long", header=False,
-        quote="",
-    )
-
-
-def read_pair_counts_tsv(spark: SparkSession, path: str) -> DataFrame:
-    """pairCounts: `sf \\t wikiurl \\t count` (CandidateMapSource.scala:44)."""
-    return spark.read.csv(
-        path, sep="\t", schema="sf string, uri string, pair_count long",
-        header=False, quote="",
-    )
-
-
 def read_wortschatz_words(
     spark: SparkSession, path: str, min_count: int = 100
 ) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Blocking + salted pair generation + connected components."""
+"""Blocking counters + connected components."""
 
 import random
 
@@ -6,19 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.config import PipelineParams
-from dbpedia_spotlight_spark.operators.blocking import (
-    generate_pairs,
-    salted_blocks,
-)
+from dbpedia_spotlight_spark.operators.blocking import salted_blocks
 from dbpedia_spotlight_spark.operators.cc import (
     cluster_assignments,
     connected_components,
 )
-from dbpedia_spotlight_spark.operators.pairs import (
-    edges_from_resolution,
-    score_pairs,
-    string_channel,
-)
+from dbpedia_spotlight_spark.operators.pairs import edges_from_resolution
 
 
 def _mentions_df(spark, rows):
@@ -50,34 +43,19 @@ def _union_find(nodes, edges):
 # ---------------------------------------------------------------------------
 
 
-def test_salted_pair_generation_is_complete_and_deduped(spark):
-    """Every unordered within-block pair appears exactly once, even when
-    the block is salt-split."""
+def test_salted_block_counters(spark):
+    """A 40-mention block at cap 8 splits into 5 salt buckets: 5·6/2 = 15
+    bucket-pair tasks, plus 1 for the unsplit 3-mention block."""
     rows = [(f"m{i:03d}", "Hot Form", f"d{i}") for i in range(40)]
     rows += [(f"x{i:03d}", "Cold Form", f"e{i}") for i in range(3)]
     mentions = _mentions_df(spark, rows)
     params = PipelineParams(salt_block_cap=8)
 
-    salted, tasks, counters = salted_blocks(mentions, params)
-    pairs = generate_pairs(salted, tasks, params).collect()
-
-    got = {
-        tuple(sorted((r["mention_key_a"], r["mention_key_b"]))) for r in pairs
-    }
-    assert len(pairs) == len(got), "duplicate pairs emitted"
-    hot = [f"m{i:03d}" for i in range(40)]
-    cold = [f"x{i:03d}" for i in range(3)]
-    want = {
-        tuple(sorted((a, b)))
-        for grp in (hot, cold)
-        for i, a in enumerate(grp)
-        for b in grp[i + 1 :]
-    }
-    assert got == want
+    counters = salted_blocks(mentions, params)
     assert counters.n_blocks == 2
     assert counters.n_blocks_split == 1
     assert counters.max_block_size == 40
-    assert counters.n_salt_tasks >= 1 + 5 * 6 // 2  # cold + hot bucket pairs
+    assert counters.n_salt_tasks == 16
 
 
 def test_blocking_key_is_normalized_sf(spark):
@@ -85,26 +63,9 @@ def test_blocking_key_is_normalized_sf(spark):
         spark,
         [("m1", "The United-States!", "d1"), ("m2", "united states", "d2")],
     )
-    salted, tasks, _ = salted_blocks(mentions)
-    keys = {r["block_key"] for r in salted.collect()}
-    assert keys == {"united states"}
-    pairs = generate_pairs(salted, tasks).collect()
-    assert len(pairs) == 1
-
-
-def test_string_channel_scores(spark):
-    pairs = spark.createDataFrame(
-        [("m1", "martha", "m2", "marhta"), ("m3", "abc", "m4", "xyz")],
-        "mention_key_a string, sf_a string, mention_key_b string, sf_b string",
-    )
-    rows = {r["mention_key_a"]: r for r in string_channel(pairs).collect()}
-    assert rows["m1"]["jw_score"] == pytest.approx(0.9611, abs=1e-4)
-    assert rows["m3"]["jw_score"] == 0.0
-    scored = {
-        r["mention_key_a"]: r for r in score_pairs(string_channel(pairs)).collect()
-    }
-    assert scored["m1"]["pair_score"] == scored["m1"]["jw_score"]
-    assert scored["m1"]["is_match"] and not scored["m3"]["is_match"]
+    counters = salted_blocks(mentions)
+    assert counters.n_blocks == 1
+    assert counters.max_block_size == 2
 
 
 # ---------------------------------------------------------------------------
@@ -207,3 +168,37 @@ def test_bounded_probe_scopes_and_restores_limit_conf(spark):
     with pytest.raises(Exception):
         cc_mod._bounded_probe(bad)
     assert spark.conf.get(key) == "1"
+
+
+class _ConfAtCollect:
+    """Stand-in for the probe's input frame: its collect records the
+    limit-collect conf in force at that moment."""
+
+    def __init__(self, spark):
+        self.sparkSession = spark
+        self.seen = None
+
+    def limit(self, n):
+        return self
+
+    def toArrow(self):
+        self.seen = self.sparkSession.conf.get(
+            "spark.sql.limit.initialNumPartitions"
+        )
+
+
+@pytest.mark.parametrize(
+    "value, applied",
+    [("5", "5"), ("1", "1"), ("junk", "32"), ("0", "32"), ("-3", "32")],
+)
+def test_bounded_probe_reads_parts_knob_at_call_time(spark, monkeypatch,
+                                                     value, applied):
+    """SPARK_CC_PROBE_PARTS set after import is the width the probe
+    applies; a value that does not parse or is below 1 falls back to 32
+    without raising."""
+    from dbpedia_spotlight_spark.operators import cc as cc_mod
+
+    monkeypatch.setenv("SPARK_CC_PROBE_PARTS", value)
+    frame = _ConfAtCollect(spark)
+    cc_mod._bounded_probe(frame)
+    assert frame.seen == applied

@@ -23,11 +23,14 @@ from dbpedia_spotlight_spark.operators.ann import (
     lsh_topk,
     make_hyperplanes,
 )
-from dbpedia_spotlight_spark.operators.cc import _driver_union_find
+from dbpedia_spotlight_spark.operators.cc import _union_find_arrow
 from dbpedia_spotlight_spark.operators.dedup import (
+    _band_join,
+    _bucket_md5,
     minhash_lsh_candidates,
     simhash64_udf,
     simhash_dedup,
+    word_shingles_udf,
 )
 
 
@@ -230,9 +233,19 @@ def test_minhash_md5_kernel_matches_exploded_twin(spark, dup_docs):
     """Single-kernel md5 signatures (+ per-id merge) == the exploded
     groupBy(min(md5)) plan, on the id-aliasing corpus (the groupBy
     merged shingle sets of rows sharing an id)."""
-    kw = dict(shingle_n=3, num_hashes=8, bands=4)
-    twin = minhash_lsh_candidates(dup_docs, hash_fn="md5_exploded", **kw)
-    got = minhash_lsh_candidates(dup_docs, hash_fn="md5", **kw)
+    n, num_hashes, bands = 3, 8, 4
+    exploded = dup_docs.select(
+        F.col("doc_id").alias("_id"),
+        F.explode(word_shingles_udf(n)(F.col("text"))).alias("g"),
+    )
+    sig = exploded.groupBy("_id").agg(F.array(*[
+        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("g"))))
+        for i in range(num_hashes)
+    ]).alias("sig"))
+    twin = _band_join(sig, bands, num_hashes // bands, _bucket_md5,
+                      id_unique=True)
+    got = minhash_lsh_candidates(dup_docs, hash_fn="md5", shingle_n=n,
+                                 num_hashes=num_hashes, bands=bands)
     assert _rows(got) == _rows(twin)
 
 
@@ -255,8 +268,7 @@ def _reference_union_find(edges):
     return sorted((n, find(n)) for n in parent)
 
 
-@pytest.mark.parametrize("shape", ["chain", "star", "random", "two_cliques"])
-def test_vectorized_union_find_matches_reference(spark, shape):
+def _shape_edges(shape):
     rng = random.Random(hash(shape) & 0xFFFF)
     if shape == "chain":
         edges = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(800)]
@@ -274,6 +286,12 @@ def test_vectorized_union_find_matches_reference(spark, shape):
                  for _ in range(200)]
         edges += [(f"b{rng.randrange(40):02d}", f"b{rng.randrange(40):02d}")
                   for _ in range(200)]
+    return edges
+
+
+@pytest.mark.parametrize("shape", ["chain", "star", "random", "two_cliques"])
+def test_vectorized_union_find_matches_reference(spark, shape):
+    edges = _shape_edges(shape)
     edf = (
         spark.createDataFrame(edges, "src string, dst string")
         .filter(F.col("src") != F.col("dst"))
@@ -281,7 +299,27 @@ def test_vectorized_union_find_matches_reference(spark, shape):
     )
     got = sorted(
         (r["mention_key"], r["cluster_id"])
-        for r in _driver_union_find(edf).collect()
+        for r in _union_find_arrow(edf.toArrow(), spark).collect()
+    )
+    expected = _reference_union_find(
+        [(s, d) for s, d in edges if s != d]
+    )
+    assert got == expected
+
+
+@pytest.mark.parametrize("shape", ["random", "two_cliques"])
+def test_cc_probe_overflow_without_store_matches_reference(spark, shape,
+                                                           monkeypatch):
+    """An edge set over the driver gate with no checkpoint store goes
+    from the failed probe straight to the large/small-star loop."""
+    from dbpedia_spotlight_spark.operators import cc as cc_mod
+
+    monkeypatch.setattr(cc_mod, "DRIVER_CC_MAX_EDGES", 5)
+    edges = _shape_edges(shape)
+    edf = spark.createDataFrame(edges, "src string, dst string")
+    got = sorted(
+        (r["mention_key"], r["cluster_id"])
+        for r in cc_mod.connected_components(edf).collect()
     )
     expected = _reference_union_find(
         [(s, d) for s, d in edges if s != d]
